@@ -11,8 +11,13 @@ engines (DuckDB oracle, Presto semantics in the reference).
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(
@@ -86,3 +91,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def overlap(*thunks: Callable[[], T]) -> list[T]:
+    """Run independent driver builds concurrently, one thread each, and
+    return their results in argument order; the first thunk's exception
+    (in argument order) is re-raised.
+
+    Each build plans and materializes its own side (collects,
+    checkpoints, driver folds), so one side's driver-serial planning
+    overlaps the other side's cluster work. Thunks are wrapped with
+    ``inheritable_thread_target`` here, on the caller's thread, so every
+    job they launch keeps the caller's job group, description and tags.
+    The wrapper is built once per thunk: each build gets its own copy of
+    the local properties, which Spark mutates per execution."""
+    session = SparkSession.active()
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(session)(t)) for t in thunks
+        ]
+        return [f.result() for f in futures]

@@ -26,7 +26,8 @@ from data_lake_spark.catalog import TABLES, table_path
 # memo key is the exact (sql, sf_dir) pair; the SPARK side of every
 # parity test still runs fresh. DuckDB results for identical SQL on
 # identical parquet inputs are deterministic, so this cannot mask a
-# parity break.
+# parity break. Callers get a copy, so mutating a result cannot corrupt
+# later compares of the same SQL.
 _ORACLE_MEMO: dict[tuple[str, str], pd.DataFrame] = {}
 
 
@@ -41,7 +42,7 @@ def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
                     f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
                 )
         _ORACLE_MEMO[key] = con.execute(sql).fetchdf()
-    return _ORACLE_MEMO[key]
+    return _ORACLE_MEMO[key].copy()
 
 
 def _norm_cell(v: Any) -> Any:

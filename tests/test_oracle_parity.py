@@ -32,3 +32,16 @@ def test_registry_contract(spark):
     qs, os_ = e.queries(), e.oracle_sql()
     assert set(os_) <= set(qs)
     assert len(qs) >= 20
+
+
+def test_run_oracle_returns_unshared_frame(sf_dir):
+    # the oracle memo must hand out copies: a caller mutating its
+    # result would otherwise corrupt every later compare of that SQL
+    from tests.compare import run_oracle
+
+    sql = "SELECT 1 AS x"
+    first = run_oracle(sql, sf_dir)
+    first.loc[0, "x"] = 99
+    first.drop(columns="x", inplace=True)
+    again = run_oracle(sql, sf_dir)
+    assert list(again.columns) == ["x"] and again["x"].tolist() == [1]

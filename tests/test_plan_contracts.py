@@ -627,3 +627,136 @@ def test_events_normalization_session_tz_independent(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
     assert a == b
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """Every ``lambdafunction(...)`` span of a plan string."""
+    out = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        out.append(plan[m.end() : i - 1])
+    return out
+
+
+def test_sq_search_scale_is_hoisted_out_of_the_element_lambda(spark, sf_dir):
+    # sq_code_cols computes each vector's quantize scale (an array_max
+    # over the whole vector) once per row, as its own column. If the
+    # optimizer inlined it into the per-element code lambda, every
+    # element would re-run the O(d) max: O(d²) per row. Pinned on the
+    # optimized plan: no array_max inside any lambda body, and a fixed
+    # number of array_max copies, the same at every vector dimension.
+    from pyspark.sql import functions as F
+
+    from data_lake_spark.queries.llm9 import sq_code_cols, sq_codes_expr
+
+    def optimized(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    def inlined(plan: str) -> bool:
+        return any("array_max" in b for b in _lambda_bodies(plan))
+
+    plan = optimized(_REG["sq_search"].fn(spark, sf_dir))
+    assert "array_max(" in plan and not inlined(plan), plan
+
+    def vectors(dim: int):
+        return spark.range(4).select(
+            "id",
+            F.array(*[(F.col("id") - j).cast("float") for j in range(dim)])
+            .alias("embedding"),
+        )
+
+    counts = set()
+    for dim in (4, 32):
+        p = optimized(sq_code_cols(vectors(dim)).select("id", "qv"))
+        assert not inlined(p), p
+        counts.add(p.count("array_max("))
+    assert counts == {1}
+    # the checker sees the single-Column form's inlined scale
+    assert inlined(optimized(vectors(4).select(sq_codes_expr().alias("qv"))))
+
+
+def _job_groups(sc) -> dict[int, str | None]:
+    """job id -> job group of every job the status store holds."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    seq = sc._jsc.sc().statusStore().jobsList(None)
+    out = {}
+    for i in range(seq.size()):
+        j = seq.apply(i)
+        g = j.jobGroup()
+        out[j.jobId()] = g.get() if g.isDefined() else None
+    return out
+
+
+def _groups_of_jobs_run_by(spark, group: str, run) -> list[str | None]:
+    """Run ``run()`` under job group ``group``; return the job group of
+    every job it launched."""
+    sc = spark.sparkContext
+    seen = max(_job_groups(sc), default=-1)
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return [g for jid, g in sorted(_job_groups(sc).items()) if jid > seen]
+
+
+def test_overlap_returns_results_in_argument_order(spark):
+    import time
+
+    from data_lake_spark.session import overlap
+
+    def slow():
+        time.sleep(0.3)
+        return "slow"
+
+    assert overlap(slow, lambda: "fast", lambda: 3) == ["slow", "fast", 3]
+
+
+def test_overlap_reraises_the_first_thunks_exception(spark):
+    import time
+
+    from data_lake_spark.session import overlap
+
+    def first():
+        time.sleep(0.3)
+        raise ValueError("first")
+
+    def second():
+        raise KeyError("second")
+
+    with pytest.raises(ValueError, match="first"):
+        overlap(first, second)
+    with pytest.raises(KeyError, match="second"):
+        overlap(lambda: 1, second)
+
+
+def test_overlap_jobs_keep_the_callers_job_group(spark):
+    from data_lake_spark.session import overlap
+
+    groups = _groups_of_jobs_run_by(
+        spark,
+        "overlap-contract",
+        lambda: overlap(
+            lambda: spark.range(10).count(),
+            lambda: spark.range(20).collect(),
+        ),
+    )
+    assert len(groups) >= 2
+    assert set(groups) == {"overlap-contract"}, groups
+
+
+def test_lsh_recall_build_jobs_keep_the_callers_job_group(spark, sf_dir):
+    # lsh_recall's build materializes its truth and signature sides on
+    # overlap() threads; each of those jobs must still be attributed to
+    # the query that launched it
+    groups = _groups_of_jobs_run_by(
+        spark,
+        "lsh_recall-build",
+        lambda: _REG["lsh_recall"].fn(spark, sf_dir),
+    )
+    assert len(groups) >= 3
+    assert set(groups) == {"lsh_recall-build"}, groups
