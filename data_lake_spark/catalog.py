@@ -2,14 +2,17 @@
 
 Replaces the reference's Glue database + six crawlers
 (``/root/reference/src/cloudformation/data-lake-stack.yml:218-276``): Spark
-infers parquet schemas on read, and ``register_views`` is the crawler — it
-makes every table addressable by name from ``spark.sql`` exactly like
-Athena's two-part names (``earnings.py:74-75``).
+infers parquet schemas once per session per file version (``_read``), and
+``register_views`` is the crawler — it makes every table addressable by
+name from ``spark.sql`` exactly like Athena's two-part names
+(``earnings.py:74-75``).
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +38,48 @@ DIM_TABLES = frozenset({"region", "nation", "customer", "supplier", "part"})
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+# session -> {realpath: (file version, inferred schema)}; one entry per
+# path, so a rewritten table replaces its old schema instead of piling up.
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _file_version(path: str) -> tuple:
+    """``(realpath, st_ino, st_mtime_ns, st_size)`` of a parquet file; a
+    table directory adds the same tuple for every file under it. Raises
+    ``OSError`` when the path is missing."""
+    real = os.path.realpath(path)
+    st = os.stat(real)
+    version = (real, st.st_ino, st.st_mtime_ns, st.st_size)
+    if os.path.isdir(real):
+        for root, dirs, files in os.walk(real):
+            dirs.sort()
+            for f in sorted(files):
+                fst = os.stat(os.path.join(root, f))
+                version += (f, fst.st_ino, fst.st_mtime_ns, fst.st_size)
+    return version
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with schema inference once per session
+    per file version (the Glue catalog's job: footers are opened when the
+    table changes, not on every query). Inference is a Spark job; a read
+    with the cached schema launches none. A missing path is read
+    uncached, so it raises Spark's own ``AnalysisException``."""
+    try:
+        version = _file_version(path)
+    except OSError:
+        return spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        hit = _SCHEMAS.get(spark, {}).get(version[0])
+    if hit is not None and hit[0] == version:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS.setdefault(spark, {})[version[0]] = (version, df.schema)
+    return df
 
 
 def _normalize(df: DataFrame, name: str) -> DataFrame:
@@ -72,6 +117,7 @@ def load_table(
     since_ns: int | None = None,
 ) -> DataFrame:
     """Parquet scan (SURVEY §2.1 S3). Columnar, filter/column pushdown free.
+    The schema is inferred once per session per file version (``_read``).
 
     ``since_ns`` is the incremental high-watermark (SURVEY §2.1 S11, Glue
     bookmarks) for ``events``, in epoch nanoseconds. It is applied BELOW the
@@ -82,7 +128,7 @@ def load_table(
     scanner. At 100 TB this is the difference between an incremental scan
     and a full one.
     """
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = _read(spark, table_path(sf_dir, name))
     if since_ns is not None and name == "events":
         dt = df.schema["ts"].dataType
         us = int(since_ns) // 1000
@@ -108,7 +154,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     for name in TABLES:
         path = table_path(sf_dir, name)
         if os.path.exists(path):
-            df = _normalize(spark.read.parquet(path), name)
+            df = _normalize(_read(spark, path), name)
             df.createOrReplaceTempView(name)
             out[name] = df
     return out

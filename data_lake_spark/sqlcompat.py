@@ -20,7 +20,8 @@ unchanged. This module provides exactly that:
   ``date_add('week', -1, d)`` → ``presto_date_add('week', -1, d)``).
   The rewriter is string-literal-aware: nothing inside ``'…'`` (with ``''``
   escapes) is ever touched.
-- :func:`run_athena_sql` = register + translate + ``spark.sql``.
+- :func:`run_athena_sql` = register (once per session) + translate +
+  ``spark.sql``.
 
 Dialect facts encoded here (SURVEY §2.9 parity table):
 - Presto ``day_of_week`` is ISO 1=Mon…7=Sun; Spark ``dayofweek`` is
@@ -35,6 +36,8 @@ Dialect facts encoded here (SURVEY §2.9 parity table):
 from __future__ import annotations
 
 import re
+import threading
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -93,11 +96,24 @@ _COMPAT_FUNCTIONS: tuple[str, ...] = (
 )
 
 
+# Sessions whose temp-function registry already holds the shims. Temp
+# functions are per session (``spark.newSession()`` starts empty), so the
+# mark is too.
+_INSTALLED: weakref.WeakSet = weakref.WeakSet()
+_INSTALL_LOCK = threading.Lock()
+
+
 def register_presto_compat(spark: SparkSession) -> None:
-    """Install the Presto scalar-function shims as temp SQL UDFs
-    (idempotent; CREATE OR REPLACE)."""
-    for stmt in _COMPAT_FUNCTIONS:
-        spark.sql(stmt)
+    """Install the Presto scalar-function shims as temp SQL UDFs, once per
+    SparkSession; later calls on the same session issue no statement. The
+    lock is held while installing, so a concurrent caller never runs SQL
+    against a half-installed set."""
+    with _INSTALL_LOCK:
+        if spark in _INSTALLED:
+            return
+        for stmt in _COMPAT_FUNCTIONS:
+            spark.sql(stmt)
+        _INSTALLED.add(spark)
 
 
 # ---------------------------------------------------------------------------

@@ -12,6 +12,8 @@ import re
 
 import pytest
 
+from data_lake_spark.api import domain
+from data_lake_spark.catalog import register_views
 from data_lake_spark.queries import full_registry
 
 _REG = full_registry()
@@ -417,6 +419,28 @@ def test_shuffle_budget(spark, sf_dir, name):
         len(lines),
         plan,
     )
+
+
+# Eager-job budget for the catalog layer: on a warm session, resolving
+# tables reads every schema from the session cache (catalog._read), so
+# registering the views or building an api.domain adapter launches no job.
+DOMAIN_ADAPTERS = {
+    "users_dim": domain.users_dim,
+    "jasmin_performance": domain.jasmin_performance,
+    "streamate_performance": domain.streamate_performance,
+    "earnings_by_performer": domain.earnings_by_performer,
+}
+_CATALOG_BUILDS = {"register_views": register_views, **DOMAIN_ADAPTERS}
+
+
+@pytest.mark.parametrize("name", sorted(_CATALOG_BUILDS))
+def test_warm_catalog_build_launches_no_jobs(spark, sf_dir, name):
+    build = _CATALOG_BUILDS[name]
+    build(spark, sf_dir)  # warm
+    jobs = _groups_of_jobs_run_by(
+        spark, f"{name}-warm", lambda: build(spark, sf_dir)
+    )
+    assert jobs == [], (name, jobs)
 
 
 def test_filters_reach_parquet_scan(spark, sf_dir):

@@ -9,6 +9,7 @@ string handling and the Presto date-function numbering on known dates.
 from __future__ import annotations
 
 import datetime
+import re
 
 import pytest
 
@@ -116,6 +117,50 @@ def test_shims_inline_into_catalyst(spark):
         .toString()
     )
     assert "day_of_week" not in plan.lower() or "1 AS" in plan
+
+
+def test_shims_install_once_per_session(spark, monkeypatch):
+    """The first run_athena_sql on a session installs every shim; later
+    calls on the same session issue no CREATE FUNCTION statement."""
+    from pyspark.sql import SparkSession
+
+    from data_lake_spark.sqlcompat import _COMPAT_FUNCTIONS
+
+    issued: list[str] = []
+    real_sql = SparkSession.sql
+
+    def spy(self, sqlQuery, *args, **kwargs):
+        issued.append(sqlQuery)
+        return real_sql(self, sqlQuery, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "sql", spy)
+
+    def creates() -> int:
+        return sum(
+            bool(re.search(r"\bCREATE\b.*\bFUNCTION\b", s, re.I | re.S))
+            for s in issued
+        )
+
+    fresh = spark.newSession()
+    q = "SELECT day_of_week(DATE '2024-09-02') AS d"
+    assert run_athena_sql(fresh, q).first().d == 1
+    assert creates() == len(_COMPAT_FUNCTIONS)
+    issued.clear()
+    assert run_athena_sql(fresh, q).first().d == 1
+    assert creates() == 0
+    assert len(issued) == 1  # just the query itself
+
+
+def test_new_session_gets_its_own_shims(spark):
+    """spark.newSession() has its own temp-function registry: the shims
+    installed on the parent session do not reach it, so it installs its
+    own on first use."""
+    run_athena_sql(spark, "SELECT 1")
+    child = spark.newSession()
+    row = run_athena_sql(
+        child, "SELECT day_of_week(DATE '2024-09-08') AS sun"
+    ).first()
+    assert row.sun == 7
 
 
 # ---------------------------------------------------------------------------
